@@ -1,6 +1,10 @@
 package graft.iot
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.functions.RangeBucket
 
 /** End-to-end IoT-23 batch pipeline: CSV directory scan → transform →
   * Parquet, mirroring the reference job (`process_iot_data.py:235-271`)
@@ -13,7 +17,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the plan is a single narrow stage — FileScan csv → Project →
   * WriteFiles — no shuffle, no wide dependency; parallelism is file
   * splits, so it scales linearly with executors. The sorted variant
-  * adds the one shuffle that the semantics genuinely require.
+  * adds the one shuffle that the semantics genuinely require, plus a
+  * sampling job over the uid column alone for its range bounds; the
+  * full scan and transform still run once.
   */
 object IotPipeline {
 
@@ -46,33 +52,49 @@ object IotPipeline {
     * (`clickhouse_scripts/init_db.sql:30-31`, loaded by truncate +
     * positional insert, `dags/iot_processing_dag.py:55-75`). The
     * engine-native equivalent of "sorted store" is a parquet write
-    * range-partitioned AND sorted by the key: `repartitionByRange`
-    * gives non-overlapping key ranges across files (one shuffle) and
-    * `sortWithinPartitions` orders within each — together a total
-    * order usable for min/max row-group pruning on `uid` lookups,
-    * which is what MergeTree's primary index buys the reference. */
+    * range-partitioned AND sorted by the key: a range shuffle gives
+    * non-overlapping key ranges across files and `sortWithinPartitions`
+    * orders within each — together a total order usable for min/max
+    * row-group pruning on `uid` lookups, which is what MergeTree's
+    * primary index buys the reference. The range count is the
+    * session's shuffle partition count, and AQE may merge adjacent
+    * ranges of a small input; for known-large inputs use the byte-sized
+    * overload below. */
   def writeSortedByUid(df: DataFrame, outputPath: String): Unit =
-    // partition count resolved by Spark from the session conf (AQE can
-    // coalesce the ranges); for known-large inputs use the byte-sized
-    // overload below
-    df.repartitionByRange(df("uid"))
-      .sortWithinPartitions("uid")
-      .write.mode(SaveMode.Overwrite).parquet(outputPath)
+    writeSortedByUid(df, outputPath, None, identity)
 
   /** Byte-sized sorted write for the 100 TB case: the range-partition
     * count comes from the optimizer's size estimate over a target
     * bytes-per-partition, NOT from `spark.sql.shuffle.partitions` —
     * with the latter pinned to CPU count, a 100 TB input would create
-    * ~TB-sized range partitions. AQE can coalesce small ranges but
-    * cannot split oversized ones, so the split must be right up front. */
+    * ~TB-sized range partitions. The count is fixed up front (AQE
+    * neither splits nor coalesces a counted repartition). */
   def writeSortedByUid(df: DataFrame, outputPath: String,
       targetPartitionBytes: Long): Unit = {
     val estimated = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = (estimated / targetPartitionBytes).toLong.max(1L)
       .min(Int.MaxValue.toLong).toInt
-    df.repartitionByRange(n, df("uid"))
-      .sortWithinPartitions("uid")
-      .write.mode(SaveMode.Overwrite).parquet(outputPath)
+    writeSortedByUid(df, outputPath, Some(n), identity)
+  }
+
+  /** The one sorted-write body. Range bounds come from a reservoir
+    * sample of `df.select("uid")` — Catalyst prunes that to a uid-only
+    * scan, so the sampling job skips the rest of the plan (for the IoT
+    * frame: every other CSV column and the duration regexes) that
+    * `repartitionByRange`'s own sampling pass re-runs in full. Rows are
+    * then routed by [[graft.functions.RangeBucket]], which places each
+    * key exactly where `RangePartitioner` would. `n` fixes the range
+    * count; without it the count is the session's and AQE may coalesce
+    * (merging adjacent ranges keeps the order total). `above` wraps the
+    * sorted frame just before the write (e.g. an `observe`), so it runs
+    * once, in the write's result stage. */
+  private[iot] def writeSortedByUid(df: DataFrame, outputPath: String,
+      n: Option[Int], above: DataFrame => DataFrame): Unit = {
+    val ranges = n.getOrElse(df.sparkSession.sessionState.conf.numShufflePartitions)
+    val bounds = RangeBucket.sampleBounds(df.select("uid"), ranges)
+    val routed = Bridge.repartitionById(df, n,
+      Bridge.column(RangeBucket(Bridge.expr(df("uid")), bounds)))
+    writeParquet(above(routed.sortWithinPartitions("uid")), outputPath)
   }
 
   /** K2 — JDBC append sink (dead code in the reference — defined at
@@ -144,15 +166,25 @@ object IotPipeline {
     * printSchema-only "validation" (`process_iot_data.py:256,262`). */
   def runWithMetrics(spark: SparkSession, inputPath: String,
       outputPath: String): Map[String, Long] = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions._
     val obs = Observation("iot_metrics")
-    val out = Transforms.transform(readCsv(spark, inputPath))
-      .observe(obs,
-        count(lit(1)).as("rows"),
-        sum(when(col("duration_sec").isNull, 1L).otherwise(0L)).as("null_durations"),
-        sum(when(col("label") === "Malicious", 1L).otherwise(0L)).as("malicious_rows"))
-    writeParquet(out, outputPath)
-    obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    writeParquet(observeQuality(
+      Transforms.transform(readCsv(spark, inputPath)), obs), outputPath)
+    qualityCounts(obs)
   }
+
+  /** `df` with the three data-quality counters — `rows`,
+    * `null_durations`, `malicious_rows` — observed into `obs`. Put it
+    * where the frame runs once (after any range shuffle): Spark applies
+    * a result stage's accumulator update once per partition even when a
+    * task is retried. */
+  private[iot] def observeQuality(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs,
+      count(lit(1)).as("rows"),
+      sum(when(col("duration_sec").isNull, 1L).otherwise(0L)).as("null_durations"),
+      sum(when(col("label") === "Malicious", 1L).otherwise(0L)).as("malicious_rows"))
+
+  /** The counters of [[observeQuality]] once its action has run; a sum
+    * over no rows reads 0. */
+  private[iot] def qualityCounts(obs: Observation): Map[String, Long] =
+    obs.get.map { case (k, v) => k -> Option(v).fold(0L)(_.asInstanceOf[Long]) }
 }

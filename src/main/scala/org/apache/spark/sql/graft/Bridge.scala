@@ -34,4 +34,17 @@ object Bridge {
   def expr(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** `df` shuffled to the partition ids `id` computes. Unlike
+    * `Dataset.repartitionById`, the count may be left open
+    * (`numPartitions = None`): it is then the session's shuffle
+    * partition count and, like any shuffle by column, AQE may coalesce
+    * adjacent partitions. */
+  def repartitionById(df: DataFrame, numPartitions: Option[Int],
+      id: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    ofRows(df.sparkSession, RepartitionByExpression(
+      Seq(DirectShufflePartitionID(expr(id))), analyzed(df), numPartitions, None))
+  }
 }

@@ -16,6 +16,17 @@ class RunDagSpec extends SparkTestBase {
 
   private val Csv = "/root/repo/fixtures/iot_conn.csv"
 
+  private def location(table: String): java.io.File =
+    new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+
+  /** The load stages each copy under a hidden name; none may remain. */
+  private def assertNoStaging(table: String): Unit = {
+    val names = location(table).list().toSeq
+    assert(names.exists(_.endsWith(".parquet")) || spark.table(table).isEmpty)
+    assert(!names.exists(_.contains("staging")), s"left behind: $names")
+  }
+
   test("full DAG cycle twice: cleanup fires on the rerun, the serving " +
     "table equals the transform output both times (idempotent refresh), " +
     "and the observe counters match the fixture") {
@@ -31,6 +42,8 @@ class RunDagSpec extends SparkTestBase {
       .transform(IotPipeline.readCsv(spark, Csv)).count()
     assert(r1.rowsWritten == expectRows && expectRows > 0)
     assert(r1.servingCount == r1.rowsWritten)
+    assert(r1.servingCount == spark.table(table).count())
+    assertNoStaging(table)
 
     def snapshot(): Seq[String] =
       spark.table(table).orderBy("uid").collect().map(_.toString).toSeq
@@ -43,6 +56,8 @@ class RunDagSpec extends SparkTestBase {
     val r2 = RunDag.runDag(spark, Csv, dir, table)
     assert(r2.cleanedPrevious)
     assert(r2.servingCount == r1.servingCount)
+    assert(r2.servingCount == spark.table(table).count())
+    assertNoStaging(table)
     assert(snapshot() == snap1)
 
     // the serving table is exactly the transform of the source CSV
@@ -131,6 +146,54 @@ class RunDagSpec extends SparkTestBase {
     assert(err.contains("somebody_elses_data.txt") &&
       err.contains("NON-TABLE"),
       s"guard warning must list the foreign entry; got: $err")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a header-only CSV gives zero counters and an EMPTY serving table, " +
+    "on a fresh table and after a loaded cycle") {
+    val base = Files.createTempDirectory("graft_dag_empty")
+    val emptyCsv = base.resolve("header_only.csv")
+    Files.writeString(emptyCsv, Files.readAllLines(
+      java.nio.file.Paths.get(Csv)).get(0) + "\n")
+    val dir = base.toString + "/parquet"
+    val table = "iot_dag_empty_serving"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    def assertEmptyCycle(): Unit = {
+      val r = RunDag.runDag(spark, emptyCsv.toString, dir, table)
+      assert(r.rowsWritten == 0 && r.nullDurations == 0 &&
+        r.maliciousRows == 0 && r.servingCount == 0, r.toString)
+      assert(spark.table(table).count() == 0)
+      assert(spark.table(table).columns.toSeq == IotSchema.outputColumns)
+      assertNoStaging(table)
+    }
+    assertEmptyCycle()
+    assert(RunDag.runDag(spark, Csv, dir, table).servingCount > 0)
+    assertEmptyCycle()
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("schema drift fails the cycle BEFORE the truncate: the error names " +
+    "both schemas and the serving table keeps its rows") {
+    val dir = Files.createTempDirectory("graft_dag_drift").toString + "/parquet"
+    val table = "iot_dag_drift_serving"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"CREATE TABLE $table (uid STRING, legacy_score INT) USING parquet")
+    spark.sql(s"INSERT INTO $table VALUES ('C-old', 7)")
+    val e = intercept[IllegalStateException](RunDag.runDag(spark, Csv, dir, table))
+    assert(e.getMessage.contains("legacy_score") &&
+      e.getMessage.contains("duration_sec"), e.getMessage)
+    assert(spark.table(table).collect().map(_.toString).toSeq == Seq("[C-old,7]"))
+    // same names with one type changed, or the right columns in a format
+    // the copied parquet files cannot serve: both refused too
+    val out = Transforms.transform(IotPipeline.readCsv(spark, Csv)).schema
+    for ((typeOf, using) <- Seq[(String => String, String)](
+        (n => if (n == "orig_bytes") "STRING" else out(n).dataType.sql, "parquet"),
+        (n => out(n).dataType.sql, "orc"))) {
+      spark.sql(s"DROP TABLE $table")
+      spark.sql(s"CREATE TABLE $table (${out.fieldNames.map(n =>
+        s"$n ${typeOf(n)}").mkString(", ")}) USING $using")
+      intercept[IllegalStateException](RunDag.runDag(spark, Csv, dir, table))
+    }
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }

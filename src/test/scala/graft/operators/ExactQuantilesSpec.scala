@@ -169,8 +169,12 @@ class ExactQuantilesSpec extends SparkTestBase {
     // absolute counts: earlier tests' by-design cache leaks are
     // GC-collected by the ContextCleaner at arbitrary times, so a
     // before/after delta races — start from a cleared cache instead
-    // (unpersistRDD drops the persistentRdds entry synchronously)
+    // (unpersistRDD drops the persistentRdds entry synchronously).
+    // Clearing the catalog cache alone is not enough: RDD-level
+    // persists such as localCheckpoint stay registered until unpersisted
     spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
     val snap = ExactQuantiles.quantilesReleased(orders,
       Seq("o_orderstatus"), "o_totalprice", Ps)
     // the eager count inside quantilesReleased already materialized

@@ -595,19 +595,64 @@ class ScaleSpec extends SparkTestBase {
     } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", mode)
   }
 
+  /** `out` holds exactly the rows of `expected`, every file is sorted
+    * by uid (NULL first, then unsigned-byte order) and no two files'
+    * `[min, max]` uid ranges meet — a total order across the store. */
+  private def assertTotallyOrdered(out: String,
+      expected: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val back = spark.read.parquet(out)
+    assert(back.count() == expected.count(), "rows lost or duplicated")
+    assert(back.exceptAll(expected).isEmpty && expected.exceptAll(back).isEmpty)
+    def before(a: UTF8String, b: UTF8String) =
+      b != null && (a == null || a.binaryCompare(b) < 0)
+    val files = new java.io.File(out).listFiles
+      .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
+    val uids = files.map(f => spark.read.parquet(f).select("uid").collect()
+        .map(r => UTF8String.fromString(r.getString(0))).toSeq)
+      .filter(_.nonEmpty)
+    uids.foreach(u => assert(u.sliding(2).forall {
+      case Seq(a, b) => !before(b, a)
+      case _ => true
+    }, "a store file is not sorted by uid"))
+    val ranges = uids.toSeq.map(u => (u.head, u.last)).sortWith((x, y) => before(x._1, y._1))
+    ranges.sliding(2).foreach {
+      case Seq((_, hi), (lo, _)) =>
+        assert(before(hi, lo), s"uid ranges overlap at [$hi, $lo]")
+      case _ =>
+    }
+  }
+
   test("sorted-store write produces non-overlapping uid ranges") {
     val out = java.nio.file.Files.createTempDirectory("graft_sorted").toString
     val df = graft.iot.Transforms.transform(
       graft.iot.IotPipeline.readCsv(spark, "/root/repo/fixtures/iot_conn.csv"))
     graft.iot.IotPipeline.writeSortedByUid(df, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 8)
-    // uids within each output file are sorted (MergeTree ORDER BY parity)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(input_file_name())
-      .orderBy(monotonically_increasing_id())
-    val unsorted = back.select(col("uid"),
-      lag("uid", 1).over(w).as("prev")).filter(col("prev") > col("uid"))
-    assert(unsorted.count() == 0)
+    assert(spark.read.parquet(out).count() == 8)
+    assertTotallyOrdered(out, df)
+    // the session-sized ranges of a tiny input coalesce (AQE) into one file
+    assert(new java.io.File(out).list().count(_.endsWith(".parquet")) == 1)
+  }
+
+  test("sorted-store write stays totally ordered with NULL uids and with " +
+    "every uid sharing one long prefix, through both overloads") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val prefix = "C" * 300
+    val shared = (0 until 2000)
+      .map(i => (prefix + rnd.alphanumeric.take(6).mkString, i)).toDF("uid", "n")
+    val withNulls = (0 until 2000)
+      .map(i => (if (i % 3 == 0) None else Some(rnd.alphanumeric.take(8).mkString), i))
+      .toDF("uid", "n")
+    for (df <- Seq(shared, withNulls)) {
+      val out = java.nio.file.Files.createTempDirectory("graft_sorted").toString
+      graft.iot.IotPipeline.writeSortedByUid(df, out)
+      assertTotallyOrdered(out, df)
+      // byte-sized: a small target forces many more ranges than cores
+      val many = java.nio.file.Files.createTempDirectory("graft_sorted").toString
+      graft.iot.IotPipeline.writeSortedByUid(df, many, 4096L)
+      assert(new java.io.File(many).list().count(_.endsWith(".parquet")) > 4)
+      assertTotallyOrdered(many, df)
+    }
   }
 }
